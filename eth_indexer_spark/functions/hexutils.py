@@ -2,17 +2,16 @@
 
 Reference equivalents: common/utils.go:42-75 (hex ↔ bytes, 0x-strip,
 lowercase), common/utils.go:161-193 (topic unpacking), store/event_erc20.go:
-44-46 + contracts/utils.go:53-72 (ABI uint256 decode). All pure Column
-expressions except the exact uint256 decode, which needs Python int because
-``conv()`` is 64-bit and DECIMAL(38,0) < 2^256.
+44-46 + contracts/utils.go:53-72 (ABI uint256 decode). All pure JVM Column
+expressions. ``conv()`` is 64-bit and DECIMAL(38,0) < 2^256, so the exact
+uint256 decode goes through the JVM's arbitrary-precision ``BigInt``
+instead.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _c(col) -> Column:
@@ -38,21 +37,19 @@ def hex_to_bytes(col) -> Column:
     return F.unhex(_c(col))
 
 
-@F.pandas_udf(T.StringType())
-def abi_uint256(data: pd.Series) -> pd.Series:
-    """Exact decode of 32-byte big-endian ABI data → uint256 decimal string
-    (event_erc20.go:44-46). Arrow-batched; full 2^256 range."""
-    return data.map(
-        lambda b: None if b is None else str(int.from_bytes(bytes(b), "big")),
-        na_action="ignore",
+def abi_uint256(col) -> Column:
+    """Exact decode of big-endian ABI data → uint256 decimal string
+    (event_erc20.go:44-46), equal to ``str(int.from_bytes(data, "big"))``
+    over the full 2^256 range and beyond: ``scala.math.BigInt(hex, 16)``
+    through ``reflect``, no Python worker. NULL → NULL; empty data → "0"
+    (``BigInt`` rejects an empty string)."""
+    data = _c(col)
+    return (
+        F.when(data.isNull(), F.lit(None).cast("string"))
+        .when(F.length(data) == 0, F.lit("0"))
+        .otherwise(
+            F.reflect(
+                F.lit("scala.math.BigInt"), F.lit("apply"), F.hex(data), F.lit(16)
+            )
+        )
     )
-
-
-def abi_uint256_fast(col) -> Column:
-    """JVM-only decode valid for values < 1e38: splits the 32-byte word into
-    two 64-bit limbs recombined in DECIMAL(38,0). Use when the pipeline
-    guarantees bounded magnitudes; otherwise :func:`abi_uint256`."""
-    h = F.lpad(bytes_to_hex(_c(col)), 64, "0")
-    hi = F.conv(F.substring(h, 33, 16), 16, 10).cast("decimal(38,0)")
-    lo = F.conv(F.substring(h, 49, 16), 16, 10).cast("decimal(38,0)")
-    return (hi * F.lit(18446744073709551616).cast("decimal(38,0)") + lo).cast("string")

@@ -30,9 +30,45 @@ re-expressed as ``snapshot``/``version_hold``.
 from __future__ import annotations
 
 import abc
-from typing import ContextManager, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, ContextManager, Iterable, Sequence, TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
+
+# staging pool width: 4 measured faster than 8 on local[32] — table writes
+# contend on the scheduler and local FS; 4 overlaps the per-write fixed cost
+# without saturating either
+STAGING_WORKERS = 4
+
+
+def stage_concurrently(spark: SparkSession, tasks: Sequence[Callable[[], T]]) -> list[T]:
+    """Run independent staging tasks (each a few Spark jobs writing its own
+    directory) from a small fixed pool; return their results in order.
+
+    Each task is wrapped with ``inheritable_thread_target(spark)`` in the
+    caller's thread, one wrap per task: in pinned-thread mode a pool thread
+    is a fresh JVM thread, so without it the caller's job group, tags and
+    local properties never reach the task's jobs (``cancelJobGroup`` would
+    miss them). Every wrap clones the properties, because each running
+    query sets its own ``spark.sql.execution.id`` in them.
+
+    All tasks finish before the first failure (in task order) re-raises, so
+    a caller that publishes after staging publishes nothing on failure and
+    no write is still running behind it."""
+    if len(tasks) <= 1:
+        return [t() for t in tasks]
+
+    def inherit(task):
+        wrap = inheritable_thread_target(spark)
+        # without pinned threads the wrapper hands the session back unchanged
+        return task if wrap is spark else wrap(task)
+
+    with ThreadPoolExecutor(max_workers=min(STAGING_WORKERS, len(tasks))) as ex:
+        futures = [ex.submit(inherit(t)) for t in tasks]
+    return [f.result() for f in futures]
 
 
 class StoreBackend(abc.ABC):

@@ -64,6 +64,7 @@ anything else in this file.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -76,7 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from eth_indexer_spark.sinks.backend import StoreBackend
+from eth_indexer_spark.sinks.backend import StoreBackend, stage_concurrently
 from eth_indexer_spark.sinks.store import (
     BLOCK_COLUMN,
     EXTRA_PARTITIONS,
@@ -671,22 +672,33 @@ class LogStore(StoreBackend):
         transaction, store/store.go:115-173 — exact here, not staged).
         Replaying a failed batch recomputes the same remove-set against
         whatever committed and converges (M5). O(batch + overlapped files),
-        never O(table)."""
-        staged: dict[str, tuple[list[_FileMeta], int, int]] = {}
-        for table, df in tables.items():
+        never O(table).
+
+        The tables' files stage concurrently (:func:`stage_concurrently`):
+        staged files are invisible until the commit, so unlike the
+        ParquetStore no table has to be written last as a marker, and a
+        failed table leaves only vacuumable orphans behind."""
+
+        def stage(table: str, df: DataFrame):
             df = self._prep(table, df)
-            col = BLOCK_COLUMN[table]
             if block_range is not None:
                 lo, hi = block_range
             else:
+                col = BLOCK_COLUMN[table]
                 row = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
                 lo, hi = row["lo"], row["hi"]
             if lo is None:
-                continue
+                return None
             # batch files stage once and are reused across OCC retries —
             # only the survivor set depends on the concurrent state
-            metas = self._stage_files(table, df)
-            staged[table] = (metas, int(lo), int(hi))
+            return self._stage_files(table, df), int(lo), int(hi)
+
+        tasks = [functools.partial(stage, t, df) for t, df in tables.items()]
+        staged: dict[str, tuple[list[_FileMeta], int, int]] = {
+            t: r
+            for t, r in zip(tables, stage_concurrently(self.spark, tasks))
+            if r is not None
+        }
         if not staged:
             return
         schemas = {t: tables[t].schema.jsonValue() for t in staged}
@@ -799,10 +811,13 @@ class LogStore(StoreBackend):
     def update_dimensions(self, tables: dict[str, DataFrame]) -> None:
         """Several dimensions in ONE commit — atomic across dims, which the
         rename-protocol backend can only approximate (its dims commit one
-        swap at a time)."""
-        staged = {
-            t: self._stage_files(t, self._prep(t, df)) for t, df in tables.items()
-        }
+        swap at a time). The dimensions' files stage concurrently."""
+
+        def stage(table: str, df: DataFrame) -> list[_FileMeta]:
+            return self._stage_files(table, self._prep(table, df))
+
+        tasks = [functools.partial(stage, t, df) for t, df in tables.items()]
+        staged = dict(zip(tables, stage_concurrently(self.spark, tasks)))
         schemas = {t: df.schema.jsonValue() for t, df in tables.items()}
 
         def build(st: _State) -> dict | None:

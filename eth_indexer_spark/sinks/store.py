@@ -81,7 +81,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.group import GroupedData
 from pyspark.sql import functions as F
 
-from eth_indexer_spark.sinks.backend import StoreBackend
+from eth_indexer_spark.sinks.backend import StoreBackend, stage_concurrently
 
 # Unique keys per table — mirrors the reference DDL's UNIQUE indexes exactly
 # (migration/db/migrate/*.rb, SURVEY §1.4); dedup-on-key before write (M5).
@@ -734,7 +734,8 @@ class ParquetStore(StoreBackend):
         each table's own min/max block (one tiny agg job per table).
 
         Tables are independent directories, so every table EXCEPT the commit
-        marker writes from a thread pool (concurrent Spark job submission —
+        marker writes from the shared staging pool
+        (:func:`~eth_indexer_spark.sinks.backend.stage_concurrently` —
         local[32] and any real cluster schedule them in parallel; 8 serial
         write jobs were the micro-batch latency floor). ``block_headers``,
         when present, is written strictly AFTER all others complete: it is
@@ -748,31 +749,11 @@ class ParquetStore(StoreBackend):
         # untouched blocks above the range are consistent again — restore
         # through max(pre, hi)
         pre_v = self.read_version()
-        spans: list[tuple[int, int]] = []
-        if len(items) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            # 4 measured faster than 8 on local[32]: table writes contend on
-            # the scheduler and local FS; 4 overlaps the per-write fixed cost
-            # without saturating either
-            with ThreadPoolExecutor(max_workers=min(4, len(items))) as ex:
-                futures = [
-                    ex.submit(self._write_one_table, t, d, block_range)
-                    for t, d in items
-                ]
-                for f in futures:
-                    span = f.result()  # re-raise any failure BEFORE the marker
-                    if span is not None:
-                        spans.append(span)
-        else:
-            for t, d in items:
-                span = self._write_one_table(t, d, block_range)
-                if span is not None:
-                    spans.append(span)
-        for t, d in marker:
-            span = self._write_one_table(t, d, block_range)
-            if span is not None:
-                spans.append(span)
+        # any failure re-raises BEFORE the marker is written
+        tasks = [functools.partial(self._write_one_table, t, d, block_range) for t, d in items]
+        spans = stage_concurrently(self.spark, tasks)
+        spans += [self._write_one_table(t, d, block_range) for t, d in marker]
+        spans = [span for span in spans if span is not None]
         if spans:
             # Publish the boundary so snapshot readers cross into the batch
             # atomically. Advancing PAST the pre-batch boundary requires the
@@ -1075,8 +1056,9 @@ class ParquetStore(StoreBackend):
     @_locked
     def update_dimensions(self, tables: dict[str, DataFrame]) -> None:
         """Update several dimensions under ONE lock acquisition, with the
-        expensive tmp writes overlapped from a thread pool (independent
-        dirs) and the manifest+swap commits applied serially afterwards.
+        expensive tmp writes overlapped from the shared staging pool
+        (independent dirs) and the manifest+swap commits applied serially
+        afterwards.
         Crash semantics are unchanged versus sequential
         :meth:`update_dimension` calls: a crash during staging aborts every
         dim cleanly; a crash between commits leaves each dim individually
@@ -1084,20 +1066,10 @@ class ParquetStore(StoreBackend):
         version) — exactly the states the serial form can produce. Shaves a
         full write-job latency per extra dim off the ingest hot path (the
         two latest-state dims update every micro-batch)."""
-        items = list(tables.items())
-        if len(items) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(4, len(items))) as ex:
-                futures = [
-                    ex.submit(self._stage_dimension, t, d) for t, d in items
-                ]
-                for f in futures:
-                    f.result()  # any staging failure aborts before ANY commit
-        else:
-            for t, d in items:
-                self._stage_dimension(t, d)
-        for t, _ in items:
+        # any staging failure aborts before ANY commit
+        tasks = [functools.partial(self._stage_dimension, t, d) for t, d in tables.items()]
+        stage_concurrently(self.spark, tasks)
+        for t in tables:
             self._commit_dimension(t)
 
     @_locked

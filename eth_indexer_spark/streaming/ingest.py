@@ -539,7 +539,13 @@ class BlockIngestor:
             raw["transaction_receipts"],
             raw["receipt_logs"],
         )
-        headers = X.compute_header_rewards(raw["block_headers_raw"], txs, receipts)
+        # headers and events each feed several consumers (reward events, TD,
+        # the header write; the probe + deltas, the transfers write, the
+        # rollup) — pin both once per chunk instead of re-running their
+        # lineage per action
+        headers = X.compute_header_rewards(
+            raw["block_headers_raw"], txs, receipts
+        ).localCheckpoint()
 
         # ether events: the node's state-diff transfer logs are authoritative
         # (they see ether moved INSIDE contract execution, indexer.go:443-467);
@@ -553,7 +559,7 @@ class BlockIngestor:
             eth_events
             .unionByName(X.extract_erc20_transfers(logs, self.erc20))
             .unionByName(X.reward_events(headers))
-        )
+        ).localCheckpoint()
         fees = X.tx_fees(txs, receipts)
         # deltas feed both the snapshot and rollup branches — materialize
         # once (micro-batch sized) instead of recomputing the event→delta
@@ -615,7 +621,9 @@ class BlockIngestor:
         # anywhere before the header write leaves the head unadvanced, the
         # resend takes the append path, and overwrite-by-range repairs every
         # partially-written table idempotently. Headers-first would instead
-        # classify the resend as a duplicate and leave holes.
+        # classify the resend as a duplicate and leave holes. (ParquetStore
+        # enforces this order; the LogStore publishes every table in one
+        # commit, so there a crash before it leaves nothing visible.)
         self.store.write_blocks(
             block_range=(int(first_n), int(branch[-1]["number"])),
             tables={
@@ -631,9 +639,10 @@ class BlockIngestor:
         )
         # maintain the latest-state dims AFTER the commit marker: a crash
         # here leaves them one batch behind, which `_latest_state` heals with
-        # a bucket-pruned top-up on the next batch. One locked call, tmp
-        # writes overlapped (store.update_dimensions) — a full write-job
-        # latency off every micro-batch vs two sequential updates
+        # a bucket-pruned top-up on the next batch. One call, both dims'
+        # files staged concurrently by either backend (store.update_dimensions)
+        # — a full write-job latency off every micro-batch vs two sequential
+        # updates
         self.store.update_dimensions(
             {
                 "latest_balances": self._merged_latest_dim(

@@ -19,11 +19,14 @@ from __future__ import annotations
 import json
 import os
 import random
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from eth_indexer_spark.schema import RAW_SCHEMAS
 from eth_indexer_spark.sinks.logstore import LogStore, _LOG_DIR
+from eth_indexer_spark.sinks.store import ParquetStore
 from tests.test_sink import headers_df, transfers_df
 
 
@@ -178,6 +181,84 @@ def test_multi_table_batch_is_one_commit(spark, lstore):
     ) as f:
         commit = json.load(f)
     assert set(commit["tables"]) == {"block_headers", "transfers"}
+
+
+def _logs_df(spark, rows):
+    """rows: (block_number, log_index) — log_index may be None"""
+    return spark.createDataFrame(
+        [(f"t{n}", n, "c", "e", "a", "b", None, b"\x01", i) for n, i in rows],
+        RAW_SCHEMAS["receipt_logs"],
+    )
+
+
+def _batch(spark, lo, hi, bad_log_index=False):
+    return {
+        "block_headers": headers_df(spark, range(lo, hi + 1)),
+        "transfers": transfers_df(
+            spark, [("AAAA", n, f"t{n}", "a", "b", "1") for n in range(lo, hi + 1)]
+        ),
+        "receipt_logs": _logs_df(
+            spark, [(n, None if bad_log_index and n == hi else 0) for n in range(lo, hi + 1)]
+        ),
+    }
+
+
+def test_concurrent_staging_failure_publishes_nothing(spark, lstore):
+    """The tables of a batch stage side by side, yet one table failing its
+    null guard still fails the whole batch: the same ValueError, no commit,
+    and the files its sibling tables staged are orphans vacuum removes."""
+    lstore.write_blocks(_batch(spark, 100, 102), block_range=(100, 102))
+    version, commits = lstore.read_version(), _commit_versions(lstore)
+    with pytest.raises(ValueError, match=r"receipt_logs: NULL in required column"):
+        lstore.write_blocks(
+            _batch(spark, 103, 105, bad_log_index=True), block_range=(103, 105)
+        )
+    assert lstore.read_version() == version
+    assert _commit_versions(lstore) == commits
+
+    reopened = LogStore(spark, lstore.root)
+    for table, col in [
+        ("block_headers", "number"),
+        ("transfers", "block_number"),
+        ("receipt_logs", "block_number"),
+    ]:
+        assert sorted(set(_numbers(reopened, table, col))) == [100, 101, 102]
+    live = {p for fs in reopened._state(refresh=True).files.values() for p in fs}
+    data_root = os.path.join(reopened.root, "data")
+
+    def on_disk():
+        return {
+            os.path.join("data", t, n)
+            for t in os.listdir(data_root)
+            for n in os.listdir(os.path.join(data_root, t))
+        }
+
+    orphans = on_disk() - live
+    assert orphans  # the sibling tables did stage before the batch failed
+    assert reopened.vacuum(retain_versions=0) == len(orphans)
+    assert on_disk() == live
+
+
+@pytest.mark.parametrize("backend", ["log", "parquet"])
+def test_concurrent_staging_jobs_keep_caller_job_group(spark, tmp_path, backend):
+    """Staging jobs launched from the pool threads carry the caller's job
+    group, so ``cancelJobGroup`` and per-group job accounting reach them."""
+    store = (
+        LogStore(spark, str(tmp_path / "log"))
+        if backend == "log"
+        else ParquetStore(spark, str(tmp_path / "pq"), bucket_size=10)
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"staging-{backend}-{uuid.uuid4().hex[:8]}"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "concurrent staging")
+    try:
+        store.write_blocks(_batch(spark, 100, 102), block_range=(100, 102))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert len(tracker.getJobIdsForGroup(group)) >= 3  # >= one write per table
 
 
 def test_occ_two_writers_converge(spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from eth_indexer_spark.functions.hexutils import abi_uint256
 from eth_indexer_spark.pipeline import transform as tr
 from eth_indexer_spark.schema import ETH_TOKEN
 from tests.fixtures import ETH, T1, A1, A2, A3, A9, RAW_SCHEMAS, build_raw, expected_model
@@ -99,6 +100,38 @@ def test_exact_uint256_values(events):
     }
     assert 10**39 in big          # ERC20 ABI-decoded
     assert 2 * 10**39 in big      # ETH amount passthrough
+
+
+def test_abi_uint256_matches_python_int(spark):
+    """The JVM decode equals ``str(int.from_bytes(b, "big"))`` across the
+    full uint256 range, NULL and empty data, and a payload longer than one
+    ABI word."""
+    payloads = [
+        None,
+        b"",
+        b"\x07",
+        bytes(31) + b"\x0a",
+        bytes(20) + (2**96 - 1).to_bytes(12, "big"),
+        (10**38).to_bytes(32, "big"),
+        (2**255 + 12345).to_bytes(32, "big"),
+        (2**256 - 1).to_bytes(32, "big"),
+        b"\x01" + (2**256 - 1).to_bytes(32, "big"),
+    ]
+    df = spark.createDataFrame([(i, b) for i, b in enumerate(payloads)], "i int, data binary")
+    got = {r["i"]: r["v"] for r in df.select("i", abi_uint256("data").alias("v")).collect()}
+    want = {
+        i: None if b is None else str(int.from_bytes(b, "big"))
+        for i, b in enumerate(payloads)
+    }
+    assert got == want
+
+
+def test_erc20_extraction_runs_no_python_udf(raw):
+    plan = tr.extract_erc20_transfers(
+        raw["receipt_logs"], raw["erc20"]
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_tx_fees(raw, model):
